@@ -1280,7 +1280,7 @@ def q_pipeline_e2e(spark, sf_dir):
     dup = _transcripts_from_docs(spark, sf_dir).filter(
         F.col("conv_id").cast("int") < 50
     ).withColumn("conv_id", (F.col("conv_id").cast("int") + 100000).cast("string"))
-    # mapInPandas extraction (not the expression UDF): the opaque map node
+    # mapInArrow extraction (not the expression UDF): the opaque map node
     # yields REAL attributes, so the downstream quality filter can neither
     # be pushed inside it nor duplicate the extraction — one Python
     # crossing total, plan-gated. (The expression-UDF form re-evaluated
@@ -2179,7 +2179,7 @@ def q_stateful_progress(spark, sf_dir):
 
 def q_pdf_extract(spark, sf_dir):
     """PDF/layout-parse path (north rule): build deterministic PDF payloads
-    from doc text Spark-side (Arrow pandas_udf, batch-vectorized), run the
+    from doc text Spark-side (arrow_udf, batch-vectorized), run the
     SAME fused extraction UDF — extract_turn dispatches on the %PDF- magic
     to the from-scratch pdfx parser — and verify the decoded text against
     the source text in SQL."""

@@ -138,16 +138,18 @@ def gen_transcripts(
 
 
 def golden_extract(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Single-node golden outputs: the same extract_turn the UDF wraps,
-    run sequentially (FIXTURES.md §2). Compared against the Spark run for
-    exact per-turn text equality under ORDER BY conv_id, turn_idx."""
+    """Single-node golden outputs: the same extract_turn the batch loop
+    (pipeline.extract_batch) wraps, run sequentially per turn (FIXTURES.md
+    §2) and deliberately NOT through that loop, so it checks the Arrow
+    assembly independently. Compared against the Spark run for exact
+    per-turn text and span equality under ORDER BY conv_id, turn_idx."""
     out = []
     for row in pdf.itertuples(index=False):
         src = getattr(row, "source", "") or ""
         preps = preps_for(src)
-        # with_html=False: matches the UDF path being compared against
-        # (udfs.py) and skips the ~10% document-render cost for a field
-        # the golden frame never stores
+        # with_html=False: matches the batch path being compared against
+        # (pipeline.extract_batch) and skips the ~10% document-render cost
+        # for a field the golden frame never stores
         res = extract_turn(
             row.text, base_url=src, preprocessors=preps, with_html=False
         )
@@ -171,12 +173,3 @@ def synth_transcripts(spark, n_convs: int = 100, seed: int = 42, **kw):
     corpora here are test/bench scale; at production scale the input is an
     existing Iceberg table, not this generator)."""
     return spark.createDataFrame(gen_transcripts(n_convs, seed, **kw))
-
-
-def write_corpus(path: str, n_convs: int, seed: int = 42, **kw) -> str:
-    """Materialize a corpus parquet for bench runs; returns the path.
-    Timestamps coerced to micros — Spark rejects pandas' nanos parquet."""
-    gen_transcripts(n_convs, seed, **kw).to_parquet(
-        path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
-    )
-    return path

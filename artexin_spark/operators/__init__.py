@@ -2,7 +2,7 @@
 
 The reference is an article-extraction pipeline; a 100 TB training-data
 engine additionally needs corpus-level ops. All Spark-first: native
-column expressions where possible, Arrow pandas_udfs only where vector
+column expressions where possible, Arrow-batched Python only where vector
 math genuinely wants numpy.
 
     bpe.py         distributed BPE merge training / application

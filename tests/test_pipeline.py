@@ -21,26 +21,38 @@ def golden(corpus_pdf):
     return golden_extract(corpus_pdf)
 
 
-def _spark_result(spark, corpus_pdf):
-    df = spark.createDataFrame(corpus_pdf)
-    out = extract_df(spark, df, n_buckets=16)
-    return (
-        out.select("conv_id", "turn_idx", "title", "extracted_text", "n_images", "error")
-        .orderBy("conv_id", "turn_idx")
-        .toPandas()
-    )
+_GOLDEN_COLS = ["conv_id", "turn_idx", "title", "extracted_text", "spans", "n_images", "error"]
 
 
-def test_golden_per_turn_text_equality(spark, corpus_pdf, golden):
+def _span_tuples(frame):
+    return frame.assign(spans=[[(s["start"], s["end"]) for s in sp] for sp in frame.spans])
+
+
+@pytest.mark.parametrize(
+    "surface",
+    [
+        lambda spark, df: extract_df(spark, df, n_buckets=16),
+        lambda spark, df: with_extraction(df, source_col="source"),
+    ],
+    ids=["extract_df", "with_extraction"],
+)
+def test_golden_per_turn_text_equality(spark, corpus_pdf, golden, surface):
     """The north-rule correctness gate: Spark (vectorized, shuffled,
-    salted) output == single-node golden, exact per-turn text equality
-    under stable (conv_id, turn_idx) ordering."""
-    got = _spark_result(spark, corpus_pdf)
-    want = golden[["conv_id", "turn_idx", "title", "extracted_text", "n_images", "error"]]
+    salted) output == single-node golden, exact per-turn equality of
+    text AND spans under stable (conv_id, turn_idx) ordering — on the
+    batch map stage and on the SQL/DataFrame UDF surface alike."""
+    got = (
+        surface(spark, spark.createDataFrame(corpus_pdf))
+        .select(*_GOLDEN_COLS)
+        .orderBy("conv_id", "turn_idx")
+        .collect()
+    )
+    got = pd.DataFrame([r.asDict(recursive=True) for r in got], columns=_GOLDEN_COLS)
+    want = golden[_GOLDEN_COLS]
     assert len(got) == len(want)
     pd.testing.assert_frame_equal(
-        got.reset_index(drop=True),
-        want.reset_index(drop=True),
+        _span_tuples(got).reset_index(drop=True),
+        _span_tuples(want).reset_index(drop=True),
         check_dtype=False,
     )
 

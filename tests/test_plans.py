@@ -46,6 +46,10 @@ def test_extraction_is_single_arrow_crossing(spark, tmp_path):
     # count tree nodes ("MapInArrow (N)"), not the duplicate detail lines
     assert plan.count("MapInArrow (") == 1, plan
     assert "BatchEvalPython" not in plan, plan  # no per-row Python anywhere
+    # ``source`` is consumed by the extraction stage: it never rides the
+    # post-extract bucket exchange
+    exchange = plan.split("Exchange\nInput [", 1)[1].split("\n", 1)[0]
+    assert "part_key" in exchange and "source" not in exchange, exchange
     # the scan under the extraction stage reads only the transcript columns
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     for col in ("conv_id", "turn_idx", "text"):

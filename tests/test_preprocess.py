@@ -115,19 +115,18 @@ def test_pp_wikipedia_keeps_content_without_body():
 
 
 def test_empty_source_still_dispatches_catch_all():
-    """get_preps('') includes the catch-all fixheaders; the UDF batch loop
-    and the golden generator must both apply it (an `if src` shortcut on
-    either side silently skipped it for every source-less transcript)."""
-    import pandas as pd
+    """get_preps('') includes the catch-all fixheaders; the batch
+    extraction loop and the golden generator must both apply it (an `if
+    src` shortcut on either side silently skipped it for every source-less
+    transcript)."""
+    import pyarrow as pa
 
+    from artexin_spark.pipeline import extract_batch
     from artexin_spark.preprocess import get_prep_names, preps_for
-    from artexin_spark.udfs import _run_extract_batch
 
     assert get_prep_names("") == ["fixheaders"]
     assert [f.__name__ for f in preps_for("")] == ["pp_fixheaders"]
     html = "<h3>Only Heading</h3><p>Body text, long enough, with commas, here.</p>"
-    out = _run_extract_batch(
-        pd.Series([html]), pd.Series([None]), pd.Series([True])
-    )
+    out = extract_batch(pa.array([html]), pa.array([None], pa.string()))
     # fixheaders promoted h3 -> h1, so get_title finds it
-    assert out.title[0] == "Only Heading"
+    assert out.field("title").to_pylist() == ["Only Heading"]

@@ -71,7 +71,7 @@ def test_uncommitted_run_is_invisible(spark, corpus_pdf, tmp_path):
     from artexin_spark.pipeline import extract_df
 
     out = extract_df(spark, df.limit(5), n_buckets=4, source_col="source")
-    sink_io.write_run_data(out.drop("source"), sink, "crashed-run")
+    sink_io.write_run_data(out, sink, "crashed-run")
     assert os.path.isdir(sink_io.run_data_path(sink, "crashed-run"))
     assert sink_io.read_snapshot(spark, sink).count() == before
     snaps = sink_io.list_snapshots(spark, sink).toPandas()

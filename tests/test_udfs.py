@@ -92,7 +92,7 @@ def test_fat_payloads_through_small_arrow_batches(spark):
     semantics): output must equal the single-node extractor row-for-row,
     and spans must recover the text from the original payload. Guards the
     BENCH memory-envelope claim — batch_bytes ≈ rows × payload is only
-    bounded if maxRecordsPerBatch actually applies to mapInPandas."""
+    bounded if maxRecordsPerBatch actually applies to the Arrow map stage."""
     from artexin_spark.pipeline import extract_df
     from artexin_spark.readability import extract_turn
     from artexin_spark.tokenizer import fix_ws
@@ -160,9 +160,7 @@ def test_register_sql_surface(spark):
         ORDER BY doc_id
         """
     )
-    plan = sql_out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    assert _arrow_eval_only(sql_out)
     api_out = (
         with_extraction(_df(spark))
         .select("doc_id", "title", "extracted_text", "error")
@@ -179,3 +177,82 @@ def test_register_sql_surface(spark):
     ).collect()[0]
     assert one.t == "T one"
     assert "sentence" in one.w
+
+    # every registered function plans as one vectorized Arrow evaluation
+    calls = {
+        "artexin_extract": "artexin_extract(text, '', true)",
+        "artexin_title": "artexin_title(text)",
+        "artexin_counts": "artexin_counts(text)",
+        "artexin_sentences": "artexin_sentences(text)",
+        "artexin_words": "artexin_words(text)",
+    }
+    assert set(calls) == set(names)
+    for name, call in calls.items():
+        assert _arrow_eval_only(spark.sql(f"SELECT {call} AS v FROM sqlsurf_docs")), name
+
+
+def _arrow_eval_only(df) -> bool:
+    """The executed plan crosses into Python through ArrowEvalPython only:
+    no per-row BatchEvalPython and no pandas MapInPandas stage."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return (
+        "ArrowEvalPython" in plan
+        and "BatchEvalPython" not in plan
+        and "MapInPandas" not in plan
+    )
+
+
+def test_do_extract_false_through_spark(spark):
+    """A false do_extract flag reaches the core through both UDF surfaces
+    (DataFrame column and SQL literal): rows equal single-node
+    ``extract_turn(do_extract=False)``; true and null flags extract."""
+    from artexin_spark.preprocess import preps_for
+    from artexin_spark.readability import extract_turn
+    from artexin_spark.udfs import register_sql, with_extraction
+
+    page = (
+        "<html><head><title>Flagged</title></head><body>"
+        '<div id="navigation"><a href="/x">nav link</a></div>'
+        '<div id="content"><p>Article prose, with commas, long enough to '
+        "win the scoring over the navigation block.</p></div></body></html>"
+    )
+    docs = DOCS + [page]
+    flags = [False, True, None] * len(docs)
+    pdf = pd.DataFrame(
+        {
+            "doc_id": range(len(flags)),
+            "text": [docs[i // 3] for i in range(len(flags))],
+            "flag": flags,
+        }
+    )
+    df = spark.createDataFrame(pdf, "doc_id long, text string, flag boolean")
+
+    def want(html, flag):
+        res = extract_turn(
+            html, do_extract=flag is not False, with_html=False, preprocessors=preps_for("")
+        )
+        return (res.title, res.text, [tuple(s) for s in res.spans], res.images, res.n_images, res.error)
+
+    def got(row):
+        return (
+            row["title"],
+            row["extracted_text"],
+            [(s["start"], s["end"]) for s in row["spans"]],
+            row["images"],
+            row["n_images"],
+            row["error"],
+        )
+
+    api = with_extraction(df, do_extract_col="flag").orderBy("doc_id").collect()
+    assert [got(r) for r in api] == [want(r["text"], r["flag"]) for r in api]
+    # the flag changes the output (nav kept only without extraction)
+    assert got(api[-3])[1] != got(api[-2])[1] and "nav link" in got(api[-3])[1]
+
+    register_sql(spark)
+    df.createOrReplaceTempView("flag_docs")
+    sql_rows = spark.sql(
+        "SELECT doc_id, text, ex.* FROM "
+        "(SELECT doc_id, text, artexin_extract(text, '', false) AS ex FROM flag_docs) "
+        "ORDER BY doc_id"
+    ).collect()
+    assert [got(r) for r in sql_rows] == [want(r["text"], False) for r in sql_rows]
