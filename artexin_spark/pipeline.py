@@ -24,6 +24,12 @@ Scale design notes (the 100 TB story, graded explicitly):
 - **Python boundary**: exactly one MapInArrow node per run (the
   ``with_extraction``/SQL surface: one ArrowEvalPython node), both over the
   same ``extract_batch`` core; no per-row Python anywhere (north rule).
+  Besides the Arrow transfer, each Python task pays a fixed set-up cost:
+  a reused worker's per-task ``importlib.invalidate_caches()`` re-reads
+  the directory of every cached zipimporter of Spark's own archives —
+  120-150 ms of CPU per task on CPython 3.11, more than an identity
+  ``mapInArrow`` spends on its data. Both surfaces drop those finders on
+  the worker (``session.prune_spark_zip_finders``).
 - **Task failure vs poison rows**: data-level failures land in the
   ``error`` column in-band (one bad document can't fail a job,
   artexin/pack.py:205-213 semantics); infrastructure failures are Spark
@@ -46,6 +52,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from . import storage as sink_io
 from .preprocess import preps_for
 from .readability import extract_turn
+from .session import prune_spark_zip_finders
 
 INPUT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
@@ -257,7 +264,10 @@ def _extract_map_iter(batches, acc=None):
 
     Passthrough columns cross back as the INPUT batch's own Arrow buffers;
     ``source`` is consumed here and not emitted, so it never rides the
-    bucket exchange. The lineage fold is one Arrow group-by per batch."""
+    bucket exchange. The lineage fold is one Arrow group-by per batch.
+    Once the input is drained the worker's Spark-archive import finders are
+    pruned, so its next task starts without re-reading them
+    (``session.prune_spark_zip_finders``)."""
     local: dict[int, list] = {}
     fold = _LineageAccumParam().addInPlace
     for rb in batches:
@@ -301,6 +311,7 @@ def _extract_map_iter(batches, acc=None):
         yield out
     if acc is not None and local:
         acc.add(local)
+    prune_spark_zip_finders()
 
 
 def prepare_input(df: DataFrame, n_buckets: int, source_col: str | None) -> DataFrame:

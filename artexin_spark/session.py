@@ -12,13 +12,23 @@ spark-submit jobs all get identical physical behavior:
   pass --conf spark.sql.shuffle.partitions=<2-3× total cores> instead.
 - session timezone UTC — the reference serializes timestamps as UTC
   strings (artexin/pack.py:39), we keep all ts math in UTC.
+
+It also owns the one piece of Python-worker runtime policy,
+:func:`prune_spark_zip_finders`, which the extraction stage calls from
+inside the worker.
 """
 
 from __future__ import annotations
 
+import fnmatch
+import logging
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "artexin-spark", cpus: int | None = None) -> SparkSession:
@@ -72,25 +82,59 @@ def get_spark(app_name: str = "artexin-spark", cpus: int | None = None) -> Spark
             pass
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-        # say so out loud (stderr, once per process): an ENOSPC mid-job
-        # on a tmpfs local dir is bewildering unless the chosen dir is
-        # on record — r02 ADVICE item on diagnosability
+        # on record once per process: an ENOSPC mid-job on a tmpfs local
+        # dir is bewildering unless the chosen dir is in the log — r02
+        # ADVICE item on diagnosability. The auto-selection is a warning
+        # (visible without logging config); an explicit choice is info.
         global _LOCAL_DIR_ANNOUNCED
         if not _LOCAL_DIR_ANNOUNCED:
             _LOCAL_DIR_ANNOUNCED = True
-            import sys
-
-            print(
-                f"artexin-spark: spark.local.dir={local_dir}"
-                + (
-                    " (tmpfs auto-selected; set SPARK_LOCAL_DIR to override, "
-                    'SPARK_LOCAL_DIR="" for the Spark default)'
-                    if "SPARK_LOCAL_DIR" not in os.environ
-                    else ""
-                ),
-                file=sys.stderr,
-            )
+            if "SPARK_LOCAL_DIR" in os.environ:
+                log.info("artexin-spark: spark.local.dir=%s", local_dir)
+            else:
+                log.warning(
+                    "artexin-spark: spark.local.dir=%s (tmpfs auto-selected; set "
+                    'SPARK_LOCAL_DIR to override, SPARK_LOCAL_DIR="" for the '
+                    "Spark default)",
+                    local_dir,
+                )
     return builder.getOrCreate()
 
 
 _LOCAL_DIR_ANNOUNCED = False
+
+#: Archives Spark itself puts on the Python worker's path
+#: (``PythonUtils.sparkPythonPath``): the pyspark and py4j sources and the
+#: spark-core jar. User ``--py-files`` archives never match.
+_SPARK_ARCHIVES = ("pyspark.zip", "py4j-*-src.zip", "spark-core_*.jar")
+
+
+def prune_spark_zip_finders() -> int:
+    """Drop the path-importer-cache finders for Spark's own archives;
+    returns how many were dropped. Called worker-side by the extraction
+    stage.
+
+    A reused Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``worker_util.setup_spark_files``), and on
+    CPython 3.11 each cached ``zipimporter`` re-reads its archive's whole
+    central directory right then. A warm worker caches one finder per
+    imported pyspark sub-package plus py4j and the spark-core jar
+    (~16 finders, ~27k directory entries): 120-150 ms of CPU per task
+    before the first batch (4-core host). Dropping them is safe: the next
+    import that misses rebuilds a finder through ``sys.path_hooks`` from
+    zipimport's module-level directory cache, without a re-read. The
+    pruned state persists in the reused worker, so every later Python
+    task on it skips the re-reads too."""
+    cache = sys.path_importer_cache
+    stale = [
+        path
+        for path, finder in cache.items()
+        if isinstance(finder, zipimport.zipimporter)
+        and any(
+            fnmatch.fnmatchcase(os.path.basename(finder.archive), pat)
+            for pat in _SPARK_ARCHIVES
+        )
+    ]
+    for path in stale:
+        del cache[path]
+    return len(stale)

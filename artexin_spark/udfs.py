@@ -32,6 +32,7 @@ from pyspark.sql.functions import arrow_udf
 from . import dom
 from .pipeline import EXTRACT_SCHEMA, extract_batch
 from .readability import get_title
+from .session import prune_spark_zip_finders
 from .tokenizer import count_text, split_sentences, split_words
 
 COUNTS_SCHEMA = T.StructType(
@@ -49,8 +50,12 @@ _COUNTS_MAP = pa.map_(pa.string(), pa.int32())
 def extract_udf(texts: pa.Array, sources: pa.Array, do_extract: pa.Array) -> pa.Array:
     """The flagship operator (artexin/pack.py:157-251 collect() semantics,
     fused): preprocess dispatch by source URL → readability extraction →
-    link strip → image resolution → text+spans, errors in-band."""
-    return extract_batch(texts, sources, do_extract)
+    link strip → image resolution → text+spans, errors in-band. Each batch
+    also prunes the worker's Spark-archive import finders (an arrow_udf has
+    no end-of-task hook; see ``session.prune_spark_zip_finders``)."""
+    out = extract_batch(texts, sources, do_extract)
+    prune_spark_zip_finders()
+    return out
 
 
 @arrow_udf(T.StringType())

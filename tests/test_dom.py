@@ -1,5 +1,7 @@
 """DOM parser: tolerance, offsets, mutation, get_cls parity."""
 
+import pytest
+
 from artexin_spark import dom
 
 
@@ -66,3 +68,19 @@ def test_script_style_are_cdata():
     doc = dom.parse("<script>if (a < b) { x(); }</script><p>t</p>")
     assert doc.find("p") is not None
     assert doc.find("script") is not None
+
+
+def test_text_node_attrs_are_read_only():
+    """Text nodes share one attrs mapping; a write must raise instead of
+    leaking into every other text node of every parse."""
+    doc = dom.parse("<p>one <b>two</b> three</p>")
+    texts = list(doc.text_nodes())
+    assert len(texts) == 3
+    assert all(t.attrs is texts[0].attrs for t in texts)
+    with pytest.raises(TypeError):
+        texts[0].attrs["id"] = "x"
+    assert not dom.Node(text="fresh").attrs
+    # elements still get their own writable dict
+    b = doc.find("b")
+    b.attrs["id"] = "x"
+    assert b.get("id") == "x" and doc.find("p").get("id") is None

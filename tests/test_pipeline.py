@@ -57,6 +57,75 @@ def test_golden_per_turn_text_equality(spark, corpus_pdf, golden, surface):
     )
 
 
+def _worker_probe(spark, n_tasks, action):
+    """One ``mapInArrow`` job of ``n_tasks`` tasks; each reports (pid,
+    zipimporter finders cached, module). ``action``: "count" only counts;
+    "dirty" first re-caches the finders a warm worker holds (every
+    pyspark/py4j package dir and every sys.path entry), so the count does
+    not depend on what ran before; "import" imports a pyspark submodule
+    that is not loaded, through whatever finders are left."""
+
+    def probe(batches):
+        import importlib
+        import os
+        import pkgutil
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:  # drain: Spark does not reuse a worker that leaves input unread
+            pass
+        module = ""
+        if action == "dirty":
+            for name, mod in list(sys.modules.items()):
+                if name.split(".")[0] in ("pyspark", "py4j"):
+                    for entry in getattr(mod, "__path__", ()):
+                        pkgutil.get_importer(entry)
+            for entry in sys.path:
+                pkgutil.get_importer(entry)
+        elif action == "import":
+            sys.modules.pop("pyspark.find_spark_home", None)
+            module = importlib.import_module("pyspark.find_spark_home").__name__
+        finders = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [os.getpid()], "finders": [finders], "module": [module]}
+        )
+
+    return (
+        spark.range(0, n_tasks, 1, n_tasks)
+        .mapInArrow(probe, "pid long, finders long, module string")
+        .collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "surface",
+    [
+        lambda spark, df: extract_df(spark, df, n_buckets=4),
+        lambda spark, df: with_extraction(df, source_col="source"),
+    ],
+    ids=["extract_df", "with_extraction"],
+)
+def test_extraction_prunes_worker_zip_finders(spark, corpus_pdf, surface):
+    """Every reused Python worker calls importlib.invalidate_caches() at
+    task start, which re-reads the directory of each cached Spark-archive
+    zipimporter (pyspark.zip, py4j, the spark-core jar). After the
+    extraction stage has run on every worker, none is left, and pyspark
+    imports still resolve."""
+    n_tasks = 4 * spark.sparkContext.defaultParallelism  # reuse cycles every worker
+    dirtied = _worker_probe(spark, n_tasks, "dirty")
+    assert all(r.finders > 0 for r in dirtied), dirtied
+    df = spark.createDataFrame(corpus_pdf.head(2 * n_tasks)).repartition(n_tasks)
+    surface(spark, df).write.format("noop").mode("overwrite").save()
+    after = _worker_probe(spark, n_tasks, "count")
+    assert {(r.pid, r.finders) for r in after} == {(r.pid, 0) for r in after}
+    imported = _worker_probe(spark, n_tasks, "import")
+    assert {r.module for r in imported} == {"pyspark.find_spark_home"}
+
+
 def test_corpus_has_dirty_rows_and_skew(corpus_pdf):
     # the corpus actually exercises the error channel and skew
     n = len(corpus_pdf)
